@@ -107,7 +107,7 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def atomic_overwrite(df: DataFrame, path: str, partition_cols=None) -> None:
+def atomic_overwrite(df: DataFrame, path: str) -> None:
     """Write to a _tmp sibling, then swap — readers never see a half table,
     and the source table can be part of ``df``'s own plan (parquet can't
     overwrite a path it is concurrently reading). Uses the Hadoop FS API
@@ -118,18 +118,9 @@ def atomic_overwrite(df: DataFrame, path: str, partition_cols=None) -> None:
     leaves NO table — at worst ``path._old`` holds the previous version
     for manual recovery. Rename results are checked: Hadoop signals
     rename failure by returning false, not by raising.
-
-    ``partition_cols`` writes the new table hive-partitioned — used by the
-    one-time legacy→partitioned layout migration, where a dynamic
-    partition overwrite would leave the old UNpartitioned part-files at
-    the table root alongside the new partition dirs (readers would see
-    both).
     """
     tmp = f"{path}._tmp"
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
+    df.write.mode("overwrite").parquet(tmp)
     spark = df.sparkSession
     fs, target = _hadoop_fs(spark, path)
     tmp_path = _hadoop_fs(spark, tmp)[1]
@@ -208,8 +199,7 @@ def read_warehouse_table(spark: SparkSession, warehouse_dir: str, table: str):
 
 def _migrate_orders_pair(spark: SparkSession, wh: str, store) -> None:
     """One-time adoption of a plain-layout orders pair into the
-    transactional store (the analog of ``_merge_into_partitions``'s
-    legacy migration). The migrated snapshot publishes as version 1 with
+    transactional store. The migrated snapshot publishes as version 1 with
     the usual single-rename atomicity; the plain directories are removed
     only AFTER that publish (and re-swept if a crash left them behind —
     readers already prefer the store, so the leftovers are inert)."""

@@ -19,10 +19,10 @@ reduced to exactly what the orders entity needs:
   ``data/<table>/g<version>/<part>=<value>/``; nothing ever rewrites in
   place.
 * **A version manifest maps (table, partition) → generation.** Untouched
-  partitions keep their old generation entry, so a daily batch still
-  writes only the 1-2 month partitions it touches — the 100 TB shape of
-  the partition-scoped merge is preserved, byte-identical untouched
-  files and all (pinned in tests/test_pipeline.py).
+  partitions keep their old generation entry, so a daily batch reads and
+  writes only the 1-2 month partitions it touches, and untouched files
+  stay byte-identical (pinned in tests/test_pipeline.py and
+  tests/test_txn_store.py).
 * **Publish is ONE file rename** of the staged manifest
   ``versions/_tmp.v<N>.json`` → ``versions/v<N>.json``, covering BOTH
   tables. Readers resolve the highest committed manifest; at every
@@ -34,6 +34,11 @@ reduced to exactly what the orders entity needs:
 
 Single-writer, reader-resolves-at-plan-time — the same operational
 contract as ``atomic_overwrite`` (and Iceberg without a catalog lock).
+
+``PairStore.commit`` is the engine's only partition-scoped merge: the
+batch runner commits the orders pair through it, and the streaming sink
+(``streaming/incremental.py::stream_upsert_orders``) commits each
+micro-batch to a single-table store the same way.
 """
 
 from __future__ import annotations
@@ -43,6 +48,10 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 
 NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # Spark/Hive's null dir name
+# How many committed versions stay readable: current + one back — enough
+# for time-travel diffing and for ROLLBACK after a bad batch, while GC
+# still reclaims superseded data promptly.
+RETAIN_VERSIONS = 2
 
 
 def _encode_partition(value) -> str:
@@ -56,23 +65,13 @@ class PairStore:
     ``data/<table>/g<N>/`` generation dirs. ``partition_col`` is the
     physical partition column every member table shares (the orders pair:
     ``created_month``, immutable per row, so keys never migrate across
-    partitions — the same precondition the partition-scoped merge had).
+    partitions — the precondition of any partition-scoped merge).
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        partition_col: str,
-        retain_versions: int = 2,
-    ):
+    def __init__(self, spark: SparkSession, root: str, partition_col: str):
         self.spark = spark
         self.root = root
         self.partition_col = partition_col
-        # How many committed versions stay readable. 2 = current + one
-        # back: enough for time-travel diffing and for ROLLBACK after a
-        # bad batch, while GC still reclaims superseded data promptly.
-        self.retain_versions = max(1, retain_versions)
 
     # -- filesystem plumbing -------------------------------------------------
 
@@ -120,7 +119,7 @@ class PairStore:
         if raw is None:
             raise FileNotFoundError(
                 f"PairStore: version {v} is not retained at {self.root} "
-                f"(retain_versions={self.retain_versions}; available: "
+                f"(RETAIN_VERSIONS={RETAIN_VERSIONS}; available: "
                 f"{self._committed_versions()})"
             )
         return json.loads(raw)
@@ -130,14 +129,17 @@ class PairStore:
     def read_table(self, table: str, version: int | None = None) -> DataFrame | None:
         """The table's committed state, partition column included —
         current by default, or AS OF a retained ``version`` (time
-        travel; the last ``retain_versions`` manifests and every data
-        directory they reference survive GC).
+        travel; the last ``RETAIN_VERSIONS`` manifests and every data
+        directory they reference survive GC)."""
+        return self._read_entries(table, self.manifest(version)["tables"].get(table))
 
-        Reads exactly the (generation, partition) directories the
-        manifest lists — never a whole generation dir, which may hold
-        partitions superseded by later commits but not yet swept.
+    def _read_entries(self, table: str, entries: dict | None) -> DataFrame | None:
+        """Rows of the (partition → generation) ``entries`` of ``table``.
+
+        Reads exactly the (generation, partition) directories listed —
+        never a whole generation dir, which may hold partitions
+        superseded by later commits but not yet swept.
         """
-        entries = self.manifest(version)["tables"].get(table)
         if not entries:
             return None
         by_gen: dict[str, list[str]] = {}
@@ -151,28 +153,6 @@ class PairStore:
             ]
             frames.append(
                 self.spark.read.option("basePath", base).parquet(*paths)
-            )
-        df = frames[0]
-        for f in frames[1:]:
-            df = df.unionByName(f)
-        return df
-
-    def _read_partitions(self, table: str, part_keys: set[str]) -> DataFrame | None:
-        """Current rows of just the given partitions (the merge input)."""
-        entries = self.manifest()["tables"].get(table) or {}
-        hits = {k: g for k, g in entries.items() if k in part_keys}
-        if not hits:
-            return None
-        by_gen: dict[str, list[str]] = {}
-        for k, g in hits.items():
-            by_gen.setdefault(g, []).append(k)
-        frames = []
-        for gen, keys in sorted(by_gen.items()):
-            base = self._gen_dir(table, gen)
-            frames.append(
-                self.spark.read.option("basePath", base).parquet(
-                    *[f"{base}/{self.partition_col}={k}" for k in sorted(keys)]
-                )
             )
         df = frames[0]
         for f in frames[1:]:
@@ -198,10 +178,9 @@ class PairStore:
 
         ``updates`` is a list of ``(table, staged_df, merge_fn)``;
         ``merge_fn(existing_or_None, staged) -> merged`` receives the
-        current rows of ONLY the partitions the staged batch touches
-        (partition-scoped, like ``merge.upsert_partitioned``) and returns
-        the new state of those partitions. ``staged_df`` must carry
-        ``partition_col``.
+        current rows of ONLY the partitions the staged batch touches and
+        returns the new state of those partitions. ``staged_df`` must
+        carry ``partition_col``.
 
         Crash contract: every write before the final rename lands in
         fresh generation dirs no committed manifest references — a crash
@@ -213,8 +192,8 @@ class PairStore:
         """
         new_version = self.current_version() + 1
         gen = f"g{new_version:07d}"
-        man = self.manifest()
-        new_tables = {t: dict(m) for t, m in man["tables"].items()}
+        committed = self.manifest()["tables"]
+        new_tables = {t: dict(m) for t, m in committed.items()}
 
         for table, staged, merge_fn in updates:
             touched_vals = [
@@ -222,7 +201,9 @@ class PairStore:
                 for r in staged.select(self.partition_col).distinct().collect()
             ]
             touched = {_encode_partition(v) for v in touched_vals}
-            existing = self._read_partitions(table, touched)
+            existing = self._read_entries(table, {
+                k: g for k, g in committed.get(table, {}).items() if k in touched
+            })
             if existing is not None:
                 merged = merge_fn(existing, staged.select(*existing.columns))
             else:
@@ -238,23 +219,18 @@ class PairStore:
             for k in written:
                 entries[k] = gen
 
-        manifest = {
+        return self._publish({
             "version": new_version,
             "partition_col": self.partition_col,
             "tables": new_tables,
-        }
-        self._publish(manifest, new_version)
-        try:
-            self._gc(manifest)
-        except Exception as e:  # noqa: BLE001 — space reclaim only
-            import sys
+        })
 
-            print(f"PairStore gc warning ({self.root}): {e}", file=sys.stderr)
-        return new_version
-
-    def _publish(self, manifest: dict, version: int) -> None:
+    def _publish(self, manifest: dict) -> int:
+        """Stage ``manifest`` and rename it into place (THE publish
+        point), then GC best-effort. Returns the published version."""
         from .runner import fs_write_text
 
+        version = manifest["version"]
         vdir = self._versions_dir()
         tmp = f"{vdir}/_tmp.v{version:07d}.json"
         final = f"{vdir}/v{version:07d}.json"
@@ -268,6 +244,13 @@ class PairStore:
             )
         if not fs.rename(tmp_p, final_p):
             raise IOError(f"PairStore: failed to publish {final}")
+        try:
+            self._gc(manifest)
+        except Exception as e:  # noqa: BLE001 — space reclaim only
+            import sys
+
+            print(f"PairStore gc warning ({self.root}): {e}", file=sys.stderr)
+        return version
 
     def rollback(self, to_version: int) -> int:
         """Publish a RETAINED past version's table map as a NEW version —
@@ -277,22 +260,14 @@ class PairStore:
         crash contract as any commit. History stays append-only: the bad
         version remains inspectable until retention ages it out."""
         old = self.manifest(to_version)
-        new_version = self.current_version() + 1
-        manifest = {
-            "version": new_version,
+        current = self.current_version()
+        return self._publish({
+            "version": current + 1,
             "partition_col": self.partition_col,
             "tables": {t: dict(m) for t, m in old["tables"].items()},
-            "rolled_back_from": self.current_version(),
+            "rolled_back_from": current,
             "rolled_back_to": to_version,
-        }
-        self._publish(manifest, new_version)
-        try:
-            self._gc(manifest)
-        except Exception as e:  # noqa: BLE001 — space reclaim only
-            import sys
-
-            print(f"PairStore gc warning ({self.root}): {e}", file=sys.stderr)
-        return new_version
+        })
 
     def _gc(self, manifest: dict) -> None:
         """Sweep manifests beyond the retention window and data dirs no
@@ -302,7 +277,7 @@ class PairStore:
         commit's sweep)."""
         fs, vp = self._fs(self._versions_dir())
         current = manifest["version"]
-        floor = current - self.retain_versions + 1
+        floor = current - RETAIN_VERSIONS + 1
         for st in fs.listStatus(vp):
             name = st.getPath().getName()
             if name.startswith("_tmp."):

@@ -61,7 +61,7 @@ def _pq_iter_sql(prev: str, assign: str, nxt: str, dsub: int) -> str:
         GROUP BY a.j, a.cid, t.i
       ) GROUP BY j, cid
     ),
-    {nxt} AS (
+    {nxt} AS MATERIALIZED (
       SELECT j, cid, c FROM {nxt}_upd
       UNION ALL
       SELECT pc.j, pc.cid, pc.c FROM {prev} pc
@@ -92,7 +92,7 @@ def _kmeans_mean_iter_sql(prev: str, assign: str, nxt: str, dim: int) -> str:
         GROUP BY a.cid, t.i
       ) GROUP BY cid
     ),
-    {nxt} AS (
+    {nxt} AS MATERIALIZED (
       SELECT cid, c FROM {nxt}_upd
       UNION ALL
       SELECT pc.cid, pc.c FROM {prev} pc
@@ -108,7 +108,7 @@ _SUB_FROM = (
 )
 
 _PQ_B0 = """
-    b0 AS (
+    b0 AS MATERIALIZED (
       SELECT j,
              CAST(row_number() OVER (PARTITION BY j ORDER BY vec_id)
                   AS INTEGER) - 1 AS cid,
@@ -204,7 +204,7 @@ def pq_adc_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # id init) -> final cell assignment + the 8 smallest-id queries' 2-cell
 # probes (same cosine geometry, ties on cid)
 _COARSE_SQL = f"""{_UNIT_CTE},
-    c0 AS (
+    c0 AS MATERIALIZED (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INTEGER) - 1
                AS cid, u AS c
       FROM (SELECT vec_id, u FROM unit ORDER BY vec_id LIMIT 8)

@@ -11,6 +11,13 @@ semantics map 1:1 onto Structured Streaming:
 ``stream_upsert_orders`` is the production shape: JSONL landing dir →
 flatten → dedup-within-batch → keyed upsert per micro-batch, exactly-once
 via checkpoint + idempotent merge.
+
+The sink's on-disk format is a single-table ``PairStore`` root
+(``pipeline/txn_store.py``), not a plain parquet directory:
+``versions/v<N>.json`` manifests plus
+``data/fact_orders/g<N>/created_month=<yyyy-MM>/`` generation dirs.
+Read it with ``PairStore(spark, target_dir, "created_month")
+.read_table("fact_orders")``.
 """
 
 from __future__ import annotations
@@ -19,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import flatten, merge
+from ..pipeline.txn_store import PairStore
 from ..schemas import NODE_SCHEMAS
 
 
@@ -48,9 +56,14 @@ def stream_upsert_orders(
 
     Per micro-batch: flatten → latest-per-key within the batch (a batch
     can carry several versions of one order) → keyed upsert into the
-    target. The upsert is idempotent, so checkpoint replays after a crash
-    converge to the same table — the streaming analog of the reference's
-    lookback + ON CONFLICT design (daily_scheduler.py:75-81).
+    target, committed through ``PairStore.commit`` exactly as the batch
+    runner commits the orders pair: only the month partitions the batch
+    touches are read and rewritten, into a fresh generation, and one
+    manifest rename publishes them — a crash mid-batch leaves readers on
+    the previous version. The upsert is idempotent, so checkpoint
+    replays after a crash converge to the same table — the streaming
+    analog of the reference's lookback + ON CONFLICT design
+    (daily_scheduler.py:75-81).
 
     No ``withWatermark`` here: watermarks only affect stateful operators
     (aggregations, dedup, stream-stream joins), and a foreachBatch sink
@@ -65,17 +78,11 @@ def stream_upsert_orders(
 
     def merge_batch(batch: DataFrame, _epoch: int) -> None:
         staged = merge.latest_per_key(batch, "order_id", "updated_at", "order_number")
-        # Partition-scoped merge, same as the batch runner: a micro-batch
-        # touches only the month partitions its keys live in — the target
-        # never gets a full-table rewrite per trigger (created_at is
-        # immutable per order, so keys can't move across partitions).
-        merge.upsert_partitioned(
-            batch.sparkSession,
-            target_dir,
+        PairStore(batch.sparkSession, target_dir, "created_month").commit([(
+            "fact_orders",
             merge.with_month_partition(staged),
-            "order_id",
-            "created_month",
-        )
+            lambda ex, st: st if ex is None else merge.upsert(ex, st, "order_id"),
+        )])
 
     return (
         orders.writeStream.foreachBatch(merge_batch)

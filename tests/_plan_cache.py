@@ -15,6 +15,8 @@ builder invocations.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 #: plan-gate session confs: auto-broadcast OFF so a BroadcastHashJoin in
 #: a plan can come only from an explicit hint; metadata strings untruncated
 #: so PushedFilters/ReadSchema parse whole (see test_plan_gate docstring).
@@ -22,6 +24,24 @@ GATE_CONFS = {
     "spark.sql.autoBroadcastJoinThreshold": "-1",
     "spark.sql.maxMetadataStringLength": "10000",
 }
+
+
+@contextmanager
+def gate_confs(spark):
+    """Set :data:`GATE_CONFS` for the block, then restore every key to
+    its previous state — ``unset`` for a key that was unset before, so
+    the gate confs never leak into later tests."""
+    saved = {k: spark.conf.get(k, None) for k in GATE_CONFS}
+    for k, v in GATE_CONFS.items():
+        spark.conf.set(k, v)
+    try:
+        yield spark
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def fmt_plan(df) -> str:
@@ -35,20 +55,19 @@ def fmt_plan(df) -> str:
 def build_catalog_plans(spark, sf_dir: str) -> dict:
     """name -> {plan, subtrees, columns} for every catalog query.
 
-    Built under the gate confs (saved/restored around the loop).
-    Builders materialize shared subtrees, and substitution state is
-    session-global — clearCache around each build keeps one query's
-    building blocks out of another query's plan (mirrors bench.py's
-    release between queries).
+    Built under :func:`gate_confs`. Shared subtrees are lazy
+    ``localCheckpoint`` frames (``operators/materialize.py``) and never
+    enter the session's cache manager; a builder's ``.cache()`` (the
+    quarantine parse in ``sources/json_raw.py``) does, and a cached
+    relation substitutes into any later plan with a matching subtree.
+    clearCache before each build keeps one query's cache out of the
+    next query's plan.
     """
     from shopify_etl_spark.operators.materialize import capture_subtrees
     from shopify_etl_spark.plans import QUERIES
 
-    saved = {k: spark.conf.get(k, None) for k in GATE_CONFS}
-    for k, v in GATE_CONFS.items():
-        spark.conf.set(k, v)
     plans: dict[str, dict] = {}
-    try:
+    with gate_confs(spark):
         for name, spec in QUERIES.items():
             spark.catalog.clearCache()
             with capture_subtrees() as subtrees:
@@ -59,8 +78,4 @@ def build_catalog_plans(spark, sf_dir: str) -> dict:
                 "columns": list(df.columns),
             }
         spark.catalog.clearCache()
-    finally:
-        for k, v in saved.items():
-            if v is not None:
-                spark.conf.set(k, v)
     return plans

@@ -34,6 +34,7 @@ import re
 import pytest
 
 from shopify_etl_spark.plans import QUERIES
+from tests._plan_cache import GATE_CONFS, build_catalog_plans, gate_confs
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -464,22 +465,30 @@ def _kept_details(txt: str) -> str:
 
 @pytest.fixture(scope="module")
 def gate_spark(spark):
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.maxMetadataStringLength",
-        )
-    }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # 100-char default truncates PushedFilters/ReadSchema mid-list, which
-    # reads as "filter not pushed" / "narrower scan than real" (see module
-    # docstring).
-    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
-    yield spark
-    for k, v in saved.items():
-        if v is not None:
-            spark.conf.set(k, v)
+    with gate_confs(spark):
+        yield spark
+
+
+def test_gate_confs_restore_unset_keys(spark, monkeypatch):
+    """A gate conf that was unset before the plan build is unset after it
+    — not left at the gate's value for every later test file."""
+    from shopify_etl_spark import plans
+
+    monkeypatch.setattr(
+        plans, "QUERIES", {"q1_pricing_summary": QUERIES["q1_pricing_summary"]}
+    )
+    saved = {k: spark.conf.get(k, None) for k in GATE_CONFS}
+    try:
+        for k in GATE_CONFS:
+            spark.conf.unset(k)
+        build_catalog_plans(spark, SF_DIR)
+        assert {k: spark.conf.get(k, None) for k in GATE_CONFS} == {
+            k: None for k in GATE_CONFS
+        }
+    finally:
+        for k, v in saved.items():
+            if v is not None:
+                spark.conf.set(k, v)
 
 
 # catalog_plans (tests/conftest.py, session-scoped): one build per

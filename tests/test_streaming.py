@@ -7,6 +7,7 @@ import random
 
 import pytest
 
+from shopify_etl_spark.pipeline.txn_store import PairStore
 from shopify_etl_spark.streaming import stream_upsert_orders, windowed_order_counts
 
 from tests.shopify_fixtures import gen_order
@@ -30,9 +31,11 @@ def test_stream_upsert_two_batches(spark, dirs):
     rng = random.Random(7)
     batch1 = [gen_order(rng, i) for i in range(20)]
     _write_jsonl(dirs["src"] / "b1.jsonl", batch1)
+    store = PairStore(spark, dirs["target"], "created_month")
     q = stream_upsert_orders(spark, str(dirs["src"]), dirs["target"], dirs["ckpt"])
     q.awaitTermination(120)
-    out1 = spark.read.parquet(dirs["target"])
+    assert store.current_version() == 1  # one manifest rename per micro-batch
+    out1 = store.read_table("fact_orders")
     assert out1.count() == 20
 
     # batch 2: 5 updates (newer updatedAt) + 5 new orders
@@ -41,17 +44,20 @@ def test_stream_upsert_two_batches(spark, dirs):
     _write_jsonl(dirs["src"] / "b2.jsonl", updates + news)
     q2 = stream_upsert_orders(spark, str(dirs["src"]), dirs["target"], dirs["ckpt"])
     q2.awaitTermination(120)
+    assert store.current_version() == 2
 
-    out2 = spark.read.parquet(dirs["target"])
+    out2 = store.read_table("fact_orders")
     assert out2.count() == 25  # 20 + 5 new, updates absorbed
     assert out2.groupBy("order_id").count().filter("count>1").count() == 0
     upd = out2.filter("order_id = 'R-0'").collect()[0]
     assert upd.updated_at.day == 28
 
-    # restart with the same checkpoint and no new files → no-op, same table
+    # restart with the same checkpoint and no new files → no-op: no new
+    # version is published, same table
     q3 = stream_upsert_orders(spark, str(dirs["src"]), dirs["target"], dirs["ckpt"])
     q3.awaitTermination(120)
-    assert spark.read.parquet(dirs["target"]).count() == 25
+    assert store.current_version() == 2
+    assert store.read_table("fact_orders").count() == 25
 
 
 def test_windowed_counts(spark, dirs, tmp_path):

@@ -89,7 +89,7 @@ def test_random_commit_walk_matches_model(spark, tmp_path):
             for k, g in man["tables"].get(table, {}).items()
         }
         assert on_disk == live, table
-    # exactly retain_versions committed manifests survive
+    # exactly RETAIN_VERSIONS committed manifests survive
     versions = sorted((tmp_path / "pair" / "versions").glob("v*.json"))
     assert len(versions) == 2
     assert json.loads(versions[-1].read_text())["version"] == 6
@@ -106,7 +106,7 @@ def test_time_travel_and_rollback(spark, tmp_path):
     good = _store_rows(store, "t")
     store.commit([("t", _df(spark, [(1, "BAD", "2025-01")]), _upsert)])
     assert _store_rows(store, "t") == {1: ("BAD", "2025-01")}
-    # time travel: version 1 still resolves under retain_versions=2
+    # time travel: version 1 still resolves under RETAIN_VERSIONS=2
     assert {
         r["k"]: (r["v"], r["created_month"])
         for r in store.read_table("t", version=1).collect()
@@ -142,3 +142,47 @@ def test_empty_partition_disappears_from_manifest(spark, tmp_path):
     store.commit([("t", _df(spark, [(1, "dead", "2025-01")]), _drop_all)])
     assert _store_rows(store, "t") == {2: ("y", "2025-02")}
     assert "2025-01" not in store.manifest()["tables"]["t"]
+
+
+def test_single_table_commit_touches_only_staged_partitions(spark, tmp_path):
+    """The streaming sink's shape: a single-table store. The first commit
+    bootstraps a missing root; a later batch rewrites only the partitions
+    it touches (untouched partitions keep their generation and their
+    files byte-identical), and replaying the same batch is a no-op on the
+    rows."""
+    root = tmp_path / "fact"
+    store = PairStore(spark, str(root), "created_month")
+    assert not root.exists()
+    store.commit([("t", _df(spark, [
+        (1, "a", "2025-01"), (2, "b", "2025-01"),
+        (3, "c", "2025-02"), (4, "d", "2025-03"),
+    ]), _upsert)])
+    assert _store_rows(store, "t") == {
+        1: ("a", "2025-01"), 2: ("b", "2025-01"),
+        3: ("c", "2025-02"), 4: ("d", "2025-03"),
+    }
+
+    def files(month):
+        gen = store.manifest()["tables"]["t"][month]
+        part = root / "data" / "t" / gen / f"created_month={month}"
+        return {f.name: f.read_bytes() for f in part.iterdir()}
+
+    jan, mar = files("2025-01"), files("2025-03")
+    staged = _df(spark, [(3, "c2", "2025-02"), (5, "e", "2025-02")])
+    store.commit([("t", staged, _upsert)])
+    assert store.manifest()["tables"]["t"] == {
+        "2025-01": "g0000001", "2025-02": "g0000002", "2025-03": "g0000001",
+    }
+    assert files("2025-01") == jan and files("2025-03") == mar
+    out = _store_rows(store, "t")
+    assert out == {
+        1: ("a", "2025-01"), 2: ("b", "2025-01"),
+        3: ("c2", "2025-02"),  # updated
+        4: ("d", "2025-03"), 5: ("e", "2025-02"),  # inserted
+    }
+
+    # replay the same staged batch → identical rows, still only 2025-02
+    assert store.commit([("t", staged, _upsert)]) == 3
+    assert _store_rows(store, "t") == out
+    assert store.manifest()["tables"]["t"]["2025-02"] == "g0000003"
+    assert files("2025-01") == jan and files("2025-03") == mar
